@@ -111,17 +111,19 @@ def _memo_probe(df, kind: str, probe):
 
 def _plan_size_bytes(df) -> int:
     """Optimizer-estimated plan size in bytes (file-source plans: the
-    on-disk input size). 0 when the estimate is unavailable."""
+    on-disk input size). 0 when the estimate is unavailable; a failed
+    probe is not memoized, so one transient py4j error does not drop
+    the widen's size bound for the rest of the session."""
     def probe(d):
-        try:
-            return int(
-                str(d._jdf.queryExecution().optimizedPlan().stats()
-                    .sizeInBytes())
-            )
-        except Exception:
-            return 0
+        return int(
+            str(d._jdf.queryExecution().optimizedPlan().stats()
+                .sizeInBytes())
+        )
 
-    return _memo_probe(df, "bytes", probe)
+    try:
+        return _memo_probe(df, "bytes", probe)
+    except Exception:
+        return 0
 
 
 def ensure_min_parallelism(

@@ -7,9 +7,9 @@ pointer and checkpoint-file discovery used by log replay.
 
 Public names are re-exported by ``operators.delta_log`` so the split
 is invisible to callers; the tunables (``CHECKPOINT_PART_ACTIONS``,
-``TOMBSTONE_RETENTION_MS``) are read back through the ``delta_log``
-module at call time so existing monkeypatches on that module keep
-working.
+``TOMBSTONE_RETENTION_MS``) and the log-read helpers (``_read_text``,
+``_local_path``) are read back through the ``delta_log`` module at
+call time so existing monkeypatches on that module keep working.
 
 Reference: delta-io PROTOCOL.md (Checkpoints, V2 Checkpoints).
 """
@@ -24,7 +24,7 @@ import uuid
 from pyspark.sql import SparkSession
 
 from .delta_protocol import _PROTOCOL_ACTION
-from .medallion import _hadoop_fs, _local_path, _write_small_file
+from .fs import _hadoop_fs, _write_small_file
 
 #: Parquet checkpoint cadence, mirroring delta-spark's default.
 DELTA_CHECKPOINT_EVERY = 10
@@ -45,7 +45,7 @@ TOMBSTONE_RETENTION_MS = 30 * 24 * 3600 * 1000
 def _read_last_checkpoint_doc(fs, jvm, path: str) -> dict | None:
     from . import delta_log as _dl
     ps = f"{path}/_delta_log/_last_checkpoint"
-    lp = _local_path(ps)
+    lp = _dl._local_path(ps)
     if lp is not None and not os.path.exists(lp):
         return None
     if lp is None and not fs.exists(jvm.org.apache.hadoop.fs.Path(ps)):
@@ -72,8 +72,10 @@ def _checkpoint_files(fs, jvm, path: str, lc: dict) -> list[str]:
             f"{path}/_delta_log/{v:020d}.checkpoint.{i:010d}.{n:010d}.parquet"
             for i in range(1, n + 1)
         ]
+    from . import delta_log as _dl
+
     classic = f"{path}/_delta_log/{v:020d}.checkpoint.parquet"
-    lcl = _local_path(classic)
+    lcl = _dl._local_path(classic)
     if (
         os.path.exists(lcl)
         if lcl is not None

@@ -29,7 +29,7 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .medallion import _hadoop_fs
+from .fs import _hadoop_fs
 
 
 class _DeltaLogProxy:
@@ -632,8 +632,9 @@ def _fast_hive_read(spark, path: str, adds: dict, schema, pcols):
     plan nodes no matter how many partitions. The explicit schema
     doubles as schema-on-read: pre-evolution files surface typed nulls
     for newer columns, and no partition-type inference runs. Returns
-    None for layouts with intermediate non-partition dirs (e.g. the
-    lake export's _batch_*/), which take the grouped fallback."""
+    None for layouts with intermediate non-partition dirs (e.g. a
+    foreign writer's _batch_*/date=D/), which take the grouped
+    fallback."""
 
     def _hive_layout(rel: str) -> bool:
         segs = rel.split("/")[:-1]
@@ -660,9 +661,9 @@ def read_delta_changes(
     ``_commit_version``.
 
     Rows removed by overwrites/merges are not emitted (this is the
-    append feed, not a full CDF with preimages — the versioned lake's
-    ``diff_versions`` computes value-level diffs when those are
-    needed). Cost: the log tail plus a scan of ONLY the new files."""
+    append feed, not a full CDF with preimages — ``read_delta_cdf``
+    emits value-level changes when those are needed). Cost: the log
+    tail plus a scan of ONLY the new files."""
     fs, _, jvm = _hadoop_fs(spark, path)
     versions = dl._list_log_versions(fs, jvm, path)
     if not versions:

@@ -186,25 +186,52 @@ def test_vacuumed_table_parity(spark, tmp_path):
 
 
 def test_exported_lake_layout_parity(spark, tmp_path):
-    """The in-place lake export produces add paths in NESTED
-    (_batch_*/date=D/) directories — the layout that exercises the
-    reader's no-assumptions path resolution."""
-    from portfolio_data_pipelines_spark.operators.delta_log import (
-        export_versioned_as_delta,
-    )
-    from portfolio_data_pipelines_spark.operators.medallion import (
-        commit_versioned,
-    )
+    """Add paths may point into NON-Hive subdirectories
+    (``_batch_000001/date=D/…``, the layout of a batch-directory lake
+    adopted in place) — the layout that exercises the reader's
+    no-assumptions path resolution. The table starts as one
+    hand-written commit over such files; a later ``write_delta`` adds
+    root-level Hive directories, and the MIXED layout must still read
+    identically through both readers."""
+    from portfolio_data_pipelines_spark.operators import delta_log as dl
 
-    path = str(tmp_path / "lake")
+    root = tmp_path / "nested"
+    path = str(root)
     d0 = _df(spark, [(1, 1.0, _day("2021-01-01")), (2, 2.0, _day("2021-01-02"))])
-    commit_versioned(spark, path, d0, partition_col="date")
-    export_versioned_as_delta(spark, path)
+    d0.repartition("date").write.partitionBy("date").parquet(
+        f"{path}/_batch_000001"
+    )
+    adds = [
+        {
+            "add": {
+                "path": dl._encode_path(f.relative_to(root).as_posix()),
+                "partitionValues": {"date": f.parent.name.split("=", 1)[1]},
+                "size": f.stat().st_size,
+                "modificationTime": dl._now_ms(),
+                "dataChange": True,
+            }
+        }
+        for f in sorted(root.glob("_batch_000001/date=*/*.parquet"))
+    ]
+    assert len(adds) == 2
+    fs, _, jvm = dl._hadoop_fs(spark, path)
+    dl._write_commit(
+        fs, jvm, path, 0,
+        [
+            dl._commit_info("WRITE"),
+            dl._PROTOCOL_ACTION,
+            dl._metadata_action(d0, ["date"]),
+            *adds,
+        ],
+    )
     _assert_match(spark, path)
-    # Delta-native commits continue on the exported table
+    assert read_delta(spark, path).count() == 2
+    # Delta-native commits continue on top: root-level date=D/ dirs
     write_delta(spark, _df(spark, [(3, 3.0, _day("2021-01-03"))]),
                 path, partition_col="date")
     _assert_match(spark, path)
+    assert read_delta(spark, path).count() == 3
+    _assert_match(spark, path, version=0)
 
 
 def test_dropped_column_values_are_not_resurrected(spark, tmp_path):

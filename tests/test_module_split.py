@@ -61,7 +61,10 @@ def test_split_public_names_reexported_from_delta_log():
         "clustering_columns": "delta_maintain",
         "set_domain_metadata": "delta_maintain",
         "convert_parquet_to_delta": "delta_maintain",
-        "export_versioned_as_delta": "delta_maintain",
+        # shared filesystem helpers
+        "_hadoop_fs": "fs",
+        "_local_path": "fs",
+        "_write_small_file": "fs",
         # r15 splits keep their seam too
         "checkpoint_delta": "delta_checkpoint",
         "delete_where_dv": "delta_dv",
